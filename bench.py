@@ -37,7 +37,13 @@ def main() -> None:
     if os.path.isdir("/dev/shm"):
         os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
     spark = get_spark("bench")
+    try:
+        _bench(spark, sf_dir)
+    finally:
+        spark.stop()
 
+
+def _bench(spark, sf_dir: str) -> None:
     from pyspark.sql import functions as F
 
     from clucene_spark.index.build import InvertedIndex

@@ -34,6 +34,8 @@ INDEX_TOKEN_SCHEMA = T.StructType(
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("term", T.StringType(), False),
         T.StructField("pos", T.IntegerType(), False),
+        # the doc's token count, repeated on each of its tokens
+        T.StructField("dl", T.IntegerType(), False),
     ]
 )
 
@@ -44,12 +46,13 @@ def tokenize_standard(
     doc_id_col: str = "doc_id",
     full: bool = False,
 ) -> DataFrame:
-    """docs -> token rows: (doc_id, term, pos) by default; full=True adds
-    (start_off, end_off, type) for term-vector / highlight use.
+    """docs -> token rows: (doc_id, term, pos, dl) by default; full=True
+    emits (doc_id, term, pos, start_off, end_off, type) for term-vector /
+    highlight use.
 
     Column-prunes to exactly (doc_id, text) before the Python stage so the
     Arrow transfer carries no dead columns, and the indexing path emits
-    only the three columns the postings build needs — the Arrow return
+    only the four columns the postings build needs — the Arrow return
     serialization of the exploded token table is the dominant cost of this
     stage, not the DFA itself."""
     src = docs.select(
@@ -105,6 +108,7 @@ def tokenize_standard(
                     "doc_id": np.repeat(doc_ids, counts),
                     "term": pd.Series(terms, dtype="object"),
                     "pos": poss,
+                    "dl": np.repeat(counts.astype(np.int32), counts),
                 }
             )
 
@@ -117,7 +121,7 @@ def tokenize_snowball(
     text_col: str = "text",
     doc_id_col: str = "doc_id",
 ) -> DataFrame:
-    """docs -> (doc_id, pos, term) through the SnowballAnalyzer chain
+    """docs -> (doc_id, term, pos, dl) through the SnowballAnalyzer chain
     (StandardTokenizer -> StandardFilter -> LowerCase -> SnowballFilter for
     `language`, reference snowball/SnowballAnalyzer.h) — Arrow-batched
     like tokenize_standard; the per-token stemmer is pure Python inside
@@ -151,6 +155,7 @@ def tokenize_snowball(
                     "doc_id": np.repeat(doc_ids, counts),
                     "term": pd.Series(terms, dtype="object"),
                     "pos": poss,
+                    "dl": np.repeat(counts.astype(np.int32), counts),
                 }
             )
 

@@ -4,10 +4,16 @@ The write path restates CLucene's DocumentsWriter invert+flush pipeline
 (reference: src/core/CLucene/index/DocumentsWriter.cpp:679-810,
 DocumentsWriterThreadState.cpp:778-950) as declarative DataFrame plans:
 
-    docs ──tokenize──> tokens(doc_id, pos, term)
-         ──groupBy(term, doc_id)──> postings(term, doc_id, tf, positions)
-         ──groupBy(doc_id)───────> doc_lens(doc_id, dl)
-         ──groupBy(term)─────────> term_dict(term, df, cf)
+    docs ──tokenize──> tokens(doc_id, pos, term, dl)
+         ──groupBy(term, doc_id)──> postings(term, doc_id, tf, positions, dl)
+    postings ──groupBy(doc_id)────> doc_lens(doc_id, dl)
+             ──groupBy(term)──────> term_dict(term, df, cf)
+
+The tokenizer knows each document's length ``dl`` (its token count) while
+it inverts the document, as CLucene's DocumentsWriter does, so every token
+and posting row carries it: a scorer reads dl off the posting row instead
+of joining doc_lens per query, and doc_lens / term_dict derive from the
+postings, so a cached index runs the analyzer once.
 
 Scale notes (100 TB / 10^12-doc design point):
   * tokenize + partial aggregation are map-side (no shuffle before the
@@ -39,27 +45,38 @@ def tokenize_whitespace(
     (reference: src/core/CLucene/analysis/Analyzers.cpp:98-124). The
     driver-provided ``documents`` table is already clean lowercase text, so
     this is the fast path; the StandardAnalyzer DFA (analysis/standard.py)
-    is the parity path for raw webtext.
+    is the parity path for raw webtext. Emits (doc_id, pos, term, dl), dl
+    being the doc's token count.
     """
+    words = F.split(F.col(text_col), " ")
     return (
         docs.select(
             F.col(doc_id_col).alias("doc_id"),
-            F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "term"),
+            F.posexplode(words).alias("pos", "term"),
+            F.size(F.filter(words, lambda w: w != "")).alias("dl"),
         )
         .filter(F.col("term") != "")
     )
 
 
-def build_postings(tokens: DataFrame) -> DataFrame:
-    """(term, doc_id, tf, positions) — the exploded posting representation.
+def build_postings(tokens: DataFrame, keys=("term", "doc_id")) -> DataFrame:
+    """(term, doc_id, tf, positions, dl) — the exploded posting
+    representation; `keys` leads with ``field`` on a multi-field index.
 
     positions are sorted within (term, doc) as in CLucene's prox stream
     (reference: index/DocumentsWriterThreadState.cpp:987+). The array is
-    bounded by one document's length, so no skew hazard.
+    bounded by one document's length, so no skew hazard. dl is the doc's
+    length carried by every one of its tokens — the exact-length analogue
+    of CLucene's lossy 1-byte norms
+    (reference: index/DocumentsWriterThreadState.cpp:148-158; BM25 needs
+    the raw length, the byte codec lives in search/similarity.py). It
+    rides the same aggregation, so the postings keep the shuffle layout
+    (and row order) of the plain (term, doc_id) aggregate.
     """
-    return tokens.groupBy("term", "doc_id").agg(
+    return tokens.groupBy(*keys).agg(
         F.count("*").alias("tf"),
         F.sort_array(F.collect_list("pos")).alias("positions"),
+        F.max("dl").cast("long").alias("dl"),
     )
 
 
@@ -68,20 +85,12 @@ def build_postings_noposition(tokens: DataFrame) -> DataFrame:
     return tokens.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
 
 
-def build_doc_lens(tokens: DataFrame) -> DataFrame:
-    """(doc_id, dl) field lengths — the exact-length analogue of CLucene's
-    lossy 1-byte norms (reference: index/DocumentsWriterThreadState.cpp:148-158).
-    BM25 needs the raw length; the byte codec lives in search/similarity.py
-    for ClassicSimilarity parity."""
-    return tokens.groupBy("doc_id").agg(F.count("*").alias("dl"))
-
-
-def build_term_dict(postings: DataFrame) -> DataFrame:
+def build_term_dict(postings: DataFrame, keys=("term",)) -> DataFrame:
     """(term, df, cf) — the term dictionary with docFreq/collectionFreq
     (reference: index/TermInfosWriter.cpp:172-181 stores docFreq per term).
     count/sum aggregate map-side first, so head-term skew only concentrates
     pre-aggregated partials — safe without salting."""
-    return postings.groupBy("term").agg(
+    return postings.groupBy(*keys).agg(
         F.count("*").alias("df"),
         F.sum("tf").alias("cf"),
     )
@@ -125,14 +134,14 @@ def _tokenize_one(docs: DataFrame, text_col: str, doc_id_col: str,
         from clucene_spark.analysis.spark import tokenize_standard
 
         return tokenize_standard(docs, text_col, doc_id_col).select(
-            "doc_id", "pos", "term"
+            "doc_id", "pos", "term", "dl"
         )
     if analyzer.startswith("snowball:"):
         from clucene_spark.analysis.spark import tokenize_snowball
 
         return tokenize_snowball(
             docs, analyzer.split(":", 1)[1], text_col, doc_id_col
-        ).select("doc_id", "pos", "term")
+        ).select("doc_id", "pos", "term", "dl")
     return tokenize_whitespace(docs, text_col, doc_id_col)
 
 
@@ -149,8 +158,8 @@ class InvertedIndex:
     per-field analyzer choice = PerFieldAnalyzerWrapper driving the build).
     In that mode every index table carries a `field` column:
 
-        tokens(doc_id, field, pos, term)
-        postings(field, term, doc_id, tf, positions)
+        tokens(doc_id, field, pos, term, dl)
+        postings(field, term, doc_id, tf, positions, dl)
         doc_lens(doc_id, field, dl)       # per-field lengths -> norms
         term_dict(field, term, df, cf)    # per-field df for fielded idf
 
@@ -177,32 +186,36 @@ class InvertedIndex:
             for fname, col, an in fields:
                 t = _tokenize_one(docs, col, doc_id_col, an)
                 parts.append(
-                    t.select("doc_id", F.lit(fname).alias("field"), "pos", "term")
+                    t.select("doc_id", F.lit(fname).alias("field"), "pos",
+                             "term", "dl")
                 )
             toks = parts[0]
             for p in parts[1:]:
                 toks = toks.unionByName(p)
             self.tokens = toks
-            self.postings = toks.groupBy("field", "term", "doc_id").agg(
-                F.count("*").alias("tf"),
-                F.sort_array(F.collect_list("pos")).alias("positions"),
-            )
-            self.doc_lens = toks.groupBy("doc_id", "field").agg(
-                F.count("*").alias("dl")
-            )
-            self.term_dict = self.postings.groupBy("field", "term").agg(
-                F.count("*").alias("df"), F.sum("tf").alias("cf")
-            )
+            postings = build_postings(toks, ("field", "term", "doc_id"))
+            self._keys = ["doc_id", "field"]
         else:
             self.default_field = text_col
             self.field_names = [text_col]
             self.tokens = _tokenize_one(docs, text_col, doc_id_col, analyzer)
-            self.postings = build_postings(self.tokens)
-            self.doc_lens = build_doc_lens(self.tokens)
-            self.term_dict = build_term_dict(self.postings)
+            postings = build_postings(self.tokens)
+            self._keys = ["doc_id"]
+        self._derive(postings)
+
+    def _derive(self, postings: DataFrame) -> None:
+        # doc_lens and term_dict read the postings, never the tokens, so
+        # a cached index runs the analyzer once
+        self.postings = postings
+        self.doc_lens = postings.groupBy(*self._keys).agg(
+            F.max("dl").alias("dl")
+        )
+        self.term_dict = build_term_dict(
+            postings, self._keys[1:] + ["term"]
+        )
 
     def cache(self) -> "InvertedIndex":
-        self.postings = self.postings.cache()
+        self._derive(self.postings.cache())
         self.doc_lens = self.doc_lens.cache()
         self.term_dict = self.term_dict.cache()
         return self

@@ -16,12 +16,12 @@ term) with the same ln(1+(N−df+.5)/(df+.5)) shape as the rest of the
 engine (reference Similarity.cpp:227-229 analogue in BM25 form).
 
 Scale shape: the postings side is filtered to the query terms FIRST
-(predicate pushdown to the scan), so the (doc_id, field) join against
-the corpus-sized doc_lens broadcasts the tiny side; per-field avgdl and
-per-term df are bounded collects (n_fields / n_terms rows); the final
-per-doc fold is one doc-keyed partial-agg shuffle + top-k
-(TakeOrderedAndProject). No corpus-sized structure ever reaches the
-driver.
+(predicate pushdown to the scan) and each posting row carries its
+per-field length dl, so no join against the corpus-sized doc_lens is
+needed; per-field avgdl and per-term df are bounded collects (n_fields /
+n_terms rows); the final per-doc fold is one doc-keyed partial-agg
+shuffle + top-k (TakeOrderedAndProject). No corpus-sized structure ever
+reaches the driver.
 """
 
 from __future__ import annotations
@@ -59,9 +59,9 @@ def bm25f_topk(
 
     # bounded stats: per-field avgdl (n_fields rows), doc-level df per
     # query term (n_terms rows), global doc count — memoized on the index
-    # object (an open-reader statistics cache, like Searcher._df_cache):
-    # r5 re-collected all three on EVERY call, three Spark jobs per query
-    # before the scoring plan even started (guide §1.2).
+    # object (an open-reader statistics cache, like Searcher's term
+    # dictionary snapshot): r5 re-collected all three on EVERY call, three
+    # Spark jobs per query before the scoring plan even started (guide §1.2).
     cache = index.__dict__.setdefault("_bm25f_cache", {})
     fkey = tuple(sorted(fields))
     if ("avgdl", fkey) not in cache:
@@ -105,8 +105,7 @@ def bm25f_topk(
     )
 
     tfn = (
-        post.join(dl, ["doc_id", "field"])
-        .withColumn(
+        post.withColumn(
             "part",
             w_expr[F.col("field")]
             * F.col("tf")

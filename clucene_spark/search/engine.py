@@ -26,13 +26,17 @@ ConjunctionScorer.cpp, PhraseScorer.cpp). The Spark restatement:
 
 One shuffle per boolean level (union + groupBy) instead of a chain of
 binary joins — the plan that survives 1000 executors. Global statistics
-(n_docs, avgdl, per-term df) are a separate first pass, mirroring
-MultiSearcher's global-df pattern (MultiSearcher.cpp:72-74).
+live on the driver: n_docs/avgdl are collected when the Searcher opens
+and per-term df comes from a term-dictionary snapshot loaded on first use
+(the RAM term index of TermInfosReader.cpp:28-180), so a query's plan is
+its only Spark work.
 """
 
 from __future__ import annotations
 
 import re
+import threading
+from bisect import bisect_left
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -366,12 +370,54 @@ def _wildcard_to_regex(pattern: str) -> str:
 # Searcher
 # ---------------------------------------------------------------------------
 
+class _TermStats:
+    """Driver-side docFreq lookup over the whole term dictionary: per
+    field, the terms sorted in code-point order (an Arrow string array)
+    and their df (an int64 array), searched by bisection. An absent term
+    has df 0."""
+
+    def __init__(self, table):
+        import pyarrow.compute as pc
+
+        self._by_field: dict[Optional[str], tuple] = {}
+        if "field" not in table.column_names:
+            self._by_field[None] = self._arrays(table)
+            return
+        fields = table.column("field")
+        for f in pc.unique(fields).to_pylist():
+            self._by_field[f] = self._arrays(table.filter(pc.equal(fields, f)))
+
+    @staticmethod
+    def _arrays(table) -> tuple:
+        table = table.sort_by("term")
+        return (table.column("term").combine_chunks(),
+                table.column("df").to_numpy())
+
+    def df(self, field: Optional[str], term: str) -> int:
+        arrays = self._by_field.get(field)
+        if arrays is None:
+            return 0
+        terms, dfs = arrays
+        i = bisect_left(terms, term, key=lambda v: v.as_py())
+        if i < len(terms) and terms[i].as_py() == term:
+            return int(dfs[i])
+        return 0
+
+
 class Searcher:
     """Compiles Query ASTs to (doc_id, score) DataFrames over an InvertedIndex.
 
     similarity: "bm25" (k1=1.2, b=0.75) or "classic" (reference
     DefaultSimilarity with exact 1/sqrt(dl) norms; byte-norm parity mode
     via norm_bytes=True replicates the lossy codec).
+
+    Statistics: n_docs and avgdl (per field when fielded) are collected
+    from ``index.doc_lens`` when the Searcher opens; per-term df comes
+    from a snapshot of the whole ``index.term_dict`` loaded by one Arrow
+    collect on first use (``doc_freqs``); dl is read off each posting row.
+    idf stays Python ``math.log`` on the driver (Spark's ``ln`` differs in
+    the last bit for some df values). A warm query therefore runs only
+    its scoring plan.
     """
 
     def __init__(self, index: InvertedIndex, similarity: str = "bm25",
@@ -400,7 +446,8 @@ class Searcher:
             ).collect()[0]
             self.n_docs = int(row["n"])
             self.avgdl = float(row["avgdl"]) if row["avgdl"] is not None else 1.0
-        self._df_cache: dict[tuple[str, str], int] = {}
+        self._term_stats: Optional[_TermStats] = None
+        self._term_stats_lock = threading.Lock()
 
     # -- field plumbing -------------------------------------------------------
 
@@ -420,6 +467,8 @@ class Searcher:
         ).drop("field")
 
     def _doclens(self, field: Optional[str]) -> DataFrame:
+        """(doc_id, dl) for a stream that does not start from posting rows
+        (span scoring); posting-row scorers read `dl` off the row."""
         if not self.fielded:
             return self.index.doc_lens
         return self.index.doc_lens.filter(
@@ -450,58 +499,32 @@ class Searcher:
 
     def doc_freqs(self, terms: list, field: Optional[str] = None) -> dict:
         """Per-term docFreq — the stats pass of weight creation
-        (reference: search/TermQuery.cpp:114-118 pulls docFreq/maxDoc).
-        Cached per searcher keyed by (field, term); one Spark job per cold
-        field fetches all its missing terms, so a whole query tree costs a
-        single stats pass per field touched (the MultiSearcher global-df
-        pattern, MultiSearcher.cpp:72-74). Accepts plain term strings
-        (resolved against `field`/default field) or (field, term) tuples;
-        the returned dict is keyed by whatever was passed in."""
+        (reference: search/TermQuery.cpp:114-118 pulls docFreq/maxDoc), as
+        a driver lookup in the term-dictionary snapshot: no Spark job once
+        the snapshot is loaded, 0 for an absent term. Accepts plain term
+        strings (resolved against `field`/default field) or (field, term)
+        tuples; the returned dict is keyed by whatever was passed in."""
         if not terms:
             return {}
-        norm = {}
+        stats = self._stats()
+        out = {}
         for k in terms:
-            if isinstance(k, tuple):
-                norm[k] = (self._f(k[0]), k[1])
-            else:
-                norm[k] = (self._f(field), k)
-        missing = {v for v in norm.values() if v not in self._df_cache}
-        if missing:
-            by_field: dict[str, set] = {}
-            for f, t in missing:
-                by_field.setdefault(f, set()).add(t)
-            for f, ts in by_field.items():
-                rows = (
-                    self._tdict(f).filter(F.col("term").isin(list(ts)))
-                    .select("term", "df")
-                    .collect()
-                )
-                found = {r["term"]: int(r["df"]) for r in rows}
-                for t in ts:
-                    self._df_cache[(f, t)] = found.get(t, 0)
-        return {k: self._df_cache[v] for k, v in norm.items()}
-
-    def _collect_terms(self, query: Query) -> list:
-        out: list = []
-        if isinstance(query, TermQuery):
-            out.append((query.field, query.term))
-        elif isinstance(query, PhraseQuery):
-            out.extend((query.field, t) for t in query.terms)
-        elif isinstance(query, BooleanQuery):
-            for c in query.clauses:
-                out.extend(self._collect_terms(c.query))
-        elif isinstance(query, FilteredQuery):
-            out.extend(self._collect_terms(query.query))
-        elif isinstance(query, MultiPhraseQuery):
-            for slot in query.slots:
-                out.extend((query.field, t) for t in slot)
-        elif isinstance(query, SpanScoreQuery):
-            from clucene_spark.search import spans as sp
-
-            out.extend(
-                (query.field, t) for t in sorted(set(sp.span_terms(query.span)))
-            )
+            f, t = (k[0], k[1]) if isinstance(k, tuple) else (field, k)
+            out[k] = stats.df(self._f(f) if self.fielded else None, t)
         return out
+
+    def _stats(self) -> _TermStats:
+        if self._term_stats is None:
+            with self._term_stats_lock:
+                if self._term_stats is None:
+                    self._term_stats = self._load_term_stats()
+        return self._term_stats
+
+    def _load_term_stats(self) -> _TermStats:
+        """The whole dictionary in one Arrow collect (term_dict is cached
+        with the index, and holds one row per distinct (field, term))."""
+        cols = (["field"] if self.fielded else []) + ["term", "df"]
+        return _TermStats(self.index.term_dict.select(*cols).toArrow())
 
     def _idf(self, df: int) -> float:
         if self.similarity == "bm25":
@@ -513,8 +536,8 @@ class Searcher:
     def _score_term_postings(self, postings: DataFrame, idf: float, boost: float,
                              query_norm: float = 1.0,
                              field: Optional[str] = None) -> DataFrame:
-        """postings(term-filtered): (doc_id, tf) -> (doc_id, score)."""
-        p = postings.join(self._doclens(field), "doc_id")
+        """postings(term-filtered): (doc_id, tf, dl) -> (doc_id, score)."""
+        p = postings
         if self.similarity == "bm25":
             score = (
                 F.lit(idf)
@@ -572,7 +595,6 @@ class Searcher:
         qf = getattr(query, "field", None)
         matches = self._expand_terms(query).select("term", "df")
         p = self._postings(qf).join(F.broadcast(matches), "term")
-        p = p.join(self._doclens(qf), "doc_id")
         if self.similarity == "bm25":
             per_term = sim.bm25_score(
                 F.col("tf"), F.col("df"), F.col("dl"),
@@ -652,7 +674,6 @@ class Searcher:
         group — never a per-group window sort of the full hit list), and
         the final top-k over one-row-per-group compiles to
         TakeOrderedAndProject."""
-        self.doc_freqs(self._collect_terms(query))
         qn = self.query_norm_for(query)
         scores = self.score(query, qn)
         if round_to is not None:
@@ -724,7 +745,6 @@ class Searcher:
         qf = query.field
         matches = self._fuzzy_matches(query)
         p = self._postings(qf).join(F.broadcast(matches), "term")
-        p = p.join(self._doclens(qf), "doc_id")
         if self.similarity == "bm25":
             per_term = sim.bm25_score(
                 F.col("tf"), F.col("df"), F.col("dl"),
@@ -757,7 +777,6 @@ class Searcher:
         if pf is None:
             return self._empty_scores()
         scored, idf_sum = pf
-        scored = scored.join(self._doclens(query.field), "doc_id")
         if self.similarity == "bm25":
             score = (
                 F.lit(idf_sum)
@@ -775,7 +794,7 @@ class Searcher:
         return scored.select("doc_id", score.alias("score"))
 
     def _phrase_freqs(self, query: PhraseQuery):
-        """(doc_id, pfreq) relation + Σidf for a phrase — the freq half of
+        """(doc_id, pfreq, dl) relation + Σidf for a phrase — the freq half of
         PhraseWeight (reference PhraseQuery.cpp:200+ builds the scorer,
         379+ explains it; both consume the same phraseFreq). Returns None
         when any phrase term is absent (reference: no scorer)."""
@@ -787,7 +806,8 @@ class Searcher:
         for i, t in enumerate(terms):
             p = (
                 self._postings(query.field).filter(F.col("term") == t)
-                .select("doc_id", F.col("positions").alias(f"pos{i}"))
+                .select("doc_id", *(["dl"] if i == 0 else []),
+                        F.col("positions").alias(f"pos{i}"))
             )
             parts.append(p)
         joined = parts[0]
@@ -826,7 +846,7 @@ class Searcher:
             )
         idf_sum = sum(self._idf(dfs[t]) for t in terms)
         scored = joined.withColumn("pfreq", freq).filter(F.col("pfreq") > 0)
-        return scored.select("doc_id", "pfreq"), idf_sum
+        return scored.select("doc_id", "pfreq", "dl"), idf_sum
 
     def _score_multi_phrase(self, query: MultiPhraseQuery,
                             query_norm: float = 1.0) -> DataFrame:
@@ -841,9 +861,10 @@ class Searcher:
                 return self._empty_scores()
             p = (
                 self._postings(query.field).filter(F.col("term").isin(slot))
-                .select("doc_id", F.explode("positions").alias("p"))
+                .select("doc_id", "dl", F.explode("positions").alias("p"))
                 .groupBy("doc_id")
-                .agg(F.sort_array(F.collect_set("p")).alias(f"pos{i}"))
+                .agg(*([F.max("dl").alias("dl")] if i == 0 else []),
+                     F.sort_array(F.collect_set("p")).alias(f"pos{i}"))
             )
             slot_dfs.append(p)
         joined = slot_dfs[0]
@@ -918,7 +939,6 @@ class Searcher:
         # idf(df=0) is ln(N)+1 (classic) / its bm25 analogue, not 0
         idf_sum = sum(self._idf(dfs[t]) for t in all_terms)
         scored = joined.withColumn("pfreq", pfreq).filter(F.col("pfreq") > 0)
-        scored = scored.join(self._doclens(query.field), "doc_id")
         if self.similarity == "bm25":
             score = (
                 F.lit(idf_sum)
@@ -1110,9 +1130,7 @@ class Searcher:
         product of the components equals score()."""
         df = self.doc_freqs([query.term], field=query.field)[query.term]
         idf = self._idf(df)
-        p = self._postings(query.field).filter(F.col("term") == query.term).join(
-            self._doclens(query.field), "doc_id"
-        )
+        p = self._postings(query.field).filter(F.col("term") == query.term)
         if self.similarity == "bm25":
             tf_comp = sim.bm25_tf(F.col("tf"), F.col("dl"),
                                   F.lit(self._avgdl(query.field)))
@@ -1147,7 +1165,6 @@ class Searcher:
         if pf is None:
             return self._empty_scores()
         p, idf_sum = pf
-        p = p.join(self._doclens(query.field), "doc_id")
         if self.similarity == "bm25":
             tf_comp = sim.bm25_tf(F.col("pfreq"), F.col("dl"),
                                   F.lit(self._avgdl(query.field)))
@@ -1271,7 +1288,6 @@ class Searcher:
         p = (
             p0.join(F.broadcast(qdf), "term")
             .join(F.broadcast(self._tdict(field).select("term", "df")), "term")
-            .join(self._doclens(field), "doc_id")
         )
         if self.similarity == "bm25":
             per_term = sim.bm25_score(
@@ -1470,7 +1486,6 @@ class Searcher:
         p = (
             self._postings(field)
             .filter(F.col("term").isin([r[0] for r in rows]))
-            .join(self._doclens(field), "doc_id")
         )
         if self.similarity == "bm25":
             per_row = (
@@ -1609,8 +1624,13 @@ class Searcher:
         """Top-k with the reference tiebreak: score DESC, doc_id ASC
         (HitQueue.cpp:100-105). Spark plans this as TakeOrderedAndProject —
         per-partition bounded top-k then a driver merge, the MultiSearcher
-        scatter-gather (MultiSearcher.cpp:122-152) for free."""
-        self.doc_freqs(self._collect_terms(query))  # one stats pass for the tree
+        scatter-gather (MultiSearcher.cpp:122-152) for free.
+
+        With `round_to`, the order (and so the k-th cut) is on the ROUNDED
+        score, as the oracle queries (`oracle_sql()`) order; the segment
+        serving paths in search/wand.py instead cut on exact scores and
+        round the kept rows, so at a near-tie below the rounding the two
+        can keep a different k-th hit."""
         qn = self.query_norm_for(query)
         scores = self.score(query, qn)
         if round_to is not None:
@@ -1637,7 +1657,6 @@ class Searcher:
         the per-partition bounded top-k. The cursor compares on the
         same rounding the caller receives, so page boundaries are
         stable across pages and engines."""
-        self.doc_freqs(self._collect_terms(query))
         qn = self.query_norm_for(query)
         scores = self.score(query, qn)
         if round_to is not None:

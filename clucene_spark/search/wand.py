@@ -281,9 +281,18 @@ def wand_query(
         "blk_max_doc", "blk_max_tf", "blk_min_dl",
     )
     hits = p.groupBy("segment").applyInPandas(_wand_one, HIT_SCHEMA)
-    if round_to is not None:
-        hits = hits.select("doc_id", F.round("score", round_to).alias("score"))
-    return hits.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    return _top_k(hits, k, round_to)
+
+
+def _top_k(hits: DataFrame, k: int, round_to: int | None) -> DataFrame:
+    """Top-k by (score DESC, doc_id ASC) on the EXACT scores, then round
+    the k kept rows — the order wand_query_local uses, so every serving
+    path cuts the same k-th hit when two scores differ only below the
+    rounding."""
+    top = hits.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    if round_to is None:
+        return top
+    return top.select("doc_id", F.round("score", round_to).alias("score"))
 
 
 # Per-WORKER decoded-postings LRU for the direct serving path: python
@@ -492,9 +501,7 @@ def wand_query_direct(
             )
 
     hits = seg_df.mapInPandas(_serve, HIT_SCHEMA)
-    if round_to is not None:
-        hits = hits.select("doc_id", F.round("score", round_to).alias("score"))
-    return hits.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    return _top_k(hits, k, round_to)
 
 
 def phrase_query_direct(
@@ -621,9 +628,7 @@ def phrase_query_direct(
             )
 
     hits = seg_df.mapInPandas(_serve, HIT_SCHEMA)
-    if round_to is not None:
-        hits = hits.select("doc_id", F.round("score", round_to).alias("score"))
-    return hits.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    return _top_k(hits, k, round_to)
 
 
 def wand_query_local(

@@ -12,21 +12,37 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the clucene_spark package (or the zip it was
+# shipped in), so Python workers import it from any working directory
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def usable_cpus() -> int:
+    """Cores this process may run on (its CPU affinity, not the host's
+    core count)."""
+    return len(os.sched_getaffinity(0))
+
 
 def get_spark(
     app_name: str = "clucene_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(usable_cpus())
     if master is None:
         # respect a master provided by spark-submit (exported as $MASTER
         # for python drivers) before falling back to local[$SPARK_GRAFT_CPUS]
         master = os.environ.get("MASTER") or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus if cpus.isdigit() else 32)
+    shuffle_partitions = shuffle_partitions or int(
+        cpus if cpus.isdigit() else usable_cpus()
+    )
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
+        # PySpark's per-Column call-site capture costs extra py4j round
+        # trips on every DataFrame/Column call of a query's plan build
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

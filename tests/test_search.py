@@ -447,7 +447,6 @@ def test_topk_collapse_one_per_group(index, sf_dir):
 
     s = Searcher(index)
     q = TermQuery(term="spark")
-    s.doc_freqs(s._collect_terms(q))
     qn = s.query_norm_for(q)
     hits = {r["doc_id"]: round(r["score"], 4)
             for r in s.score(q, qn).collect()}

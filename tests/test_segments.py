@@ -130,18 +130,25 @@ def test_gc_removes_unreferenced_segments(spark, index, tmp_path):
 # WAND rank-identity vs the naive Searcher (BM25)
 # ---------------------------------------------------------------------------
 
+def _naive_topk(searcher, q, k):
+    """The serving paths' order: top-k on exact scores, then rounded."""
+    top = searcher.topk(q, k).select(
+        "doc_id", F.round("score", 4).alias("score"))
+    return [(r["doc_id"], r["score"]) for r in top.collect()]
+
+
 def _naive_or(searcher, terms, k=10):
     q = BooleanQuery()
     for t in terms:
         q.add(TermQuery(term=t), SHOULD)
-    return [(r["doc_id"], r["score"]) for r in searcher.topk(q, k, round_to=4).collect()]
+    return _naive_topk(searcher, q, k)
 
 
 def _naive_and(searcher, terms, k=10):
     q = BooleanQuery()
     for t in terms:
         q.add(TermQuery(term=t), MUST)
-    return [(r["doc_id"], r["score"]) for r in searcher.topk(q, k, round_to=4).collect()]
+    return _naive_topk(searcher, q, k)
 
 
 @pytest.fixture(scope="module")
@@ -733,3 +740,49 @@ def test_manifest_time_travel(spark, tmp_path):
     assert latest.manifest["generation"] == 1
     with _pytest.raises(FileNotFoundError):
         SegmentStore(spark, d, generation=5)
+
+
+def test_serving_paths_cut_top_k_on_exact_scores(spark, tmp_path):
+    """Near-tie across the k-th cut: the two docs' exact scores differ by
+    less than 5e-5 and round to the same 4-dp value. Every serving path
+    ranks on the exact scores and rounds only the kept rows, so k=1 keeps
+    doc 1 (the higher exact score), not doc 0 (the lower doc_id a rounded
+    ORDER BY would keep)."""
+    from clucene_spark.index.segments import build_segments_fused
+    from clucene_spark.search.wand import (
+        phrase_query_direct,
+        wand_query_direct,
+        wand_query_local,
+    )
+
+    docs = spark.createDataFrame(
+        [(0, " ".join(["t u"] * 6 + ["x"] * 45)),
+         (1, " ".join(["t u"] * 7 + ["x"] * 56))],
+        "doc_id long, text string",
+    )
+    d = str(tmp_path / "near_tie")
+    # one doc per segment: each segment's own top-k is exact, so the
+    # near-tie meets only in the global cut
+    build_segments_fused(docs, d, docs_per_segment=1, analyzer="whitespace")
+    store = SegmentStore(spark, d)
+    assert len(store._names) == 2
+
+    def near_tie(exact):
+        assert 0 < exact[1] - exact[0] < 5e-5, exact
+        assert round(exact[0], 4) == round(exact[1], 4), exact
+
+    term = dict(wand_query_local(store, ["t"], k=2, round_to=None))
+    near_tie(term)
+    want = [(1, round(term[1], 4))]
+    for path in (wand_query, wand_query_direct):
+        got = [(r["doc_id"], r["score"])
+               for r in path(store, ["t"], k=1).collect()]
+        assert got == want, path.__name__
+    assert wand_query_local(store, ["t"], k=1) == want
+
+    phrase = {r["doc_id"]: r["score"] for r in phrase_query_direct(
+        store, ["t", "u"], k=2, round_to=None).collect()}
+    near_tie(phrase)
+    got = [(r["doc_id"], r["score"])
+           for r in phrase_query_direct(store, ["t", "u"], k=1).collect()]
+    assert got == [(1, round(phrase[1], 4))]

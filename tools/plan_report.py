@@ -57,12 +57,16 @@ def main() -> None:
     s = Searcher(idx)
     p = _plan(s.topk(TermQuery(term="spark"), 10))
     assert "TakeOrderedAndProject" in p
+    assert "Join" not in p and "BroadcastExchange" not in p
     sections.append((
         "Term top-k (relational)",
         "Top-k compiles to `TakeOrderedAndProject`: per-partition bounded "
         "priority queues + a driver merge of k rows per partition — the "
         "MultiSearcher scatter-gather, supplied by Spark. Nothing sorts "
-        "the full score stream at any scale.",
+        "the full score stream at any scale. Each posting row carries its "
+        "doc's length dl and df comes from the Searcher's driver-side "
+        "term-dictionary snapshot, so the plan has no doc_lens join and "
+        "no broadcast.",
         _tree(p),
     ))
 
@@ -75,12 +79,15 @@ def main() -> None:
     )
     p = _plan(s.score(q))
     assert "CartesianProduct" not in p and "NestedLoop" not in p
+    # the MUST_NOT anti-join is the only join
+    assert p.count("Join type:") == 1 and "Join type: LeftAnti" in p
     sections.append((
         "BooleanQuery OR/NOT (relational)",
-        "SHOULD clauses union their posting scans and fold through ONE "
-        "hash aggregate keyed on doc_id (map-side partial agg first); "
-        "MUST_NOT is a left-anti join. One shuffle per boolean level, "
-        "never a join explosion.",
+        "SHOULD clauses read their terms in one `term IN (...)` posting "
+        "scan and fold through ONE hash aggregate keyed on doc_id "
+        "(map-side partial agg first); dl comes off the posting rows; "
+        "MUST_NOT is the only join, a left-anti join. One shuffle per "
+        "boolean level, never a join explosion.",
         _tree(p),
     ))
 
@@ -257,8 +264,8 @@ def main() -> None:
         _tree(p, 14),
     ))
 
-    # BM25F: filter pushes through the postings agg, broadcast dl join,
-    # TakeOrdered top-k
+    # BM25F: filter pushes through the postings agg, dl on the posting
+    # rows, TakeOrdered top-k
     from clucene_spark.search.bm25f import bm25f_topk
 
     toksc = F.split(F.col("text"), " ")
@@ -270,16 +277,15 @@ def main() -> None:
         fields=[("text", "text", "whitespace"), ("title", "title", "whitespace")],
     )
     p = _plan(bm25f_topk(fidx, ["spark", "join"]))
-    assert "TakeOrderedAndProject" in p and "BroadcastHashJoin" in p
+    assert "TakeOrderedAndProject" in p and "Join" not in p
     assert "CartesianProduct" not in p
     sections.append((
         "BM25F weighted-field top-k",
         "The query-term filter is on a grouping key, so Catalyst pushes "
         "it below the postings aggregation to the token scan — only "
-        "matching tokens ever shuffle. The corpus-sized doc_lens join "
-        "then broadcasts the tiny filtered posting side, and the top-k "
-        "is `TakeOrderedAndProject`. 1M docs incl. index build: 18.2s "
-        "(BENCH/large_corpus.json).",
+        "matching tokens ever shuffle. Each token carries its doc's "
+        "per-field length, so the posting rows hold dl and no doc_lens "
+        "join is needed; the top-k is `TakeOrderedAndProject`.",
         _tree(p, 18),
     ))
 
