@@ -6,12 +6,19 @@ index/SegmentInfos.cpp) restated for a distributed object store:
 
   * A **segment** = one doc-ID range of the corpus, fully inverted and
     compressed. Each segment is a directory of parquet files:
-      postings.parquet   (term, df, doc_blob, tf_blob, pos_blob,
-                          blk_min_doc/max_doc/max_tf/min_dl arrays)
-      doc_lens.parquet   (doc_id, dl)
+      postings.parquet      (term, df, cf, doc_blob, tf_blob, dl_blob,
+                             pos_blob, blk_min_doc/max_doc/max_tf/min_dl)
+      doc_lens.parquet      (doc_id, dl) — (doc_id, field, dl) when fielded
+      term_index.parquet    prefix-compressed term blocks (.tis/.tii)
+      term_vectors.parquet  forward index, when built with term vectors
+      urls.parquet          (doc_id, url, warc_ts), crawl builds only
     Terms inside a segment's postings file are sorted, so parquet row-group
     min/max stats on `term` give the two-level term-dictionary behaviour
-    (binary-searchable .tii analogue) for free at read time.
+    (binary-searchable .tii analogue) for free at read time. Every builder
+    reads its input its own way, then inverts through `_invert_fields`
+    and writes through `_emit_segment` — the one place a segment's files,
+    atomic publish and checkpoint are written (the DocumentsWriter
+    flush / writeSegment role, reference index/DocumentsWriter.cpp).
   * A **manifest generation** `manifest/segments_<gen>.json` lists the live
     segments — the segments_N commit-point protocol. Readers take the max
     generation; writers commit a new generation atomically (tmp + rename).
@@ -37,9 +44,13 @@ import os
 import shutil
 import time
 import uuid
+from typing import TYPE_CHECKING, NamedTuple
 
 import numpy as np
 import pandas as pd
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -575,6 +586,59 @@ def _invert_encode_codes(doc_ids_in, codes, uniques, p, counts, wp: bool,
     return seg_tab, uniq_docs, dl_counts, n_tok, int(len(post_idx)), tv_pdf
 
 
+class _Inverted(NamedTuple):
+    """One segment's inverted content, ready for `_emit_segment`."""
+
+    postings: pa.Table
+    doc_lens: pd.DataFrame
+    docs: np.ndarray          # ascending ids of docs with >= 1 token
+    n_tokens: int
+    n_postings: int
+    term_vectors: pa.Table | None = None
+
+
+def _invert_fields(ids, fields, wp: bool, build_tv: bool = False) -> _Inverted:
+    """Analyze + invert + encode one segment's docs (ids ascending).
+
+    fields: [(name, texts, analyzer, langs), ...]. A single unnamed field
+    (name None) gives plain terms and doc_lens (doc_id, dl). Named fields
+    are inverted one pass each in sorted name order, so the composite
+    "field<US>term" keys stay globally sorted, and doc_lens carries
+    (doc_id, field, dl). build_tv adds the positions-only forward index."""
+    import pyarrow as pa
+
+    tabs, dls, tvs = [], [], []
+    n_tok = n_post = 0
+    for fname, texts, an, langs in sorted(fields, key=lambda f: f[0] or ""):
+        codes, uniq, p, counts = _analyze_docs_codes(texts, an, langs)
+        res = _invert_encode_codes(
+            ids, codes, uniq, p, counts, wp,
+            term_prefix=fname + FIELD_SEP if fname else "", build_tv=build_tv,
+        )
+        tabs.append(res[0])
+        dls.append(pd.DataFrame(
+            {"doc_id": res[1], "field": fname, "dl": res[2]} if fname
+            else {"doc_id": res[1], "dl": res[2]}
+        ))
+        n_tok += res[3]
+        n_post += res[4]
+        if build_tv:
+            tvs.append(res[5])
+    tv = None
+    if build_tv:
+        tv = pa.Table.from_pandas(
+            sort_terms_pdf(pd.concat(tvs, ignore_index=True),
+                           ["doc_id", "term"]),
+            preserve_index=False,
+        )
+    return _Inverted(
+        pa.concat_tables(tabs),
+        pd.concat(dls, ignore_index=True),
+        np.unique(np.concatenate([d["doc_id"].to_numpy() for d in dls])),
+        n_tok, n_post, tv,
+    )
+
+
 SEGMENT_SCHEMA = T.StructType(
     [
         T.StructField("term", T.StringType(), False),
@@ -808,11 +872,63 @@ def _publish_segment(tmp_path: str, seg_path: str) -> None:
 
 
 def _write_checkpoint(index_dir: str, name: str, ck: dict) -> None:
+    """tmp + rename with a per-attempt tmp name: a duplicate attempt of
+    the same task (retry or speculative twin) writes its own tmp file, so
+    neither truncates nor renames the other's out from under it."""
     fname = f"part_{name[len('seg_'):]}.json"
-    ck_tmp = os.path.join(index_dir, "checkpoints", "." + fname + ".tmp")
+    cdir = _ckpt_dir(index_dir)
+    ck_tmp = os.path.join(cdir, f".{fname}.{uuid.uuid4().hex}.tmp")
     with open(ck_tmp, "w") as f:
         json.dump(ck, f)
-    os.rename(ck_tmp, os.path.join(index_dir, "checkpoints", fname))
+    os.rename(ck_tmp, os.path.join(cdir, fname))
+
+
+def _emit_segment(index_dir: str, name: str, segment_id: int, min_doc: int,
+                  max_doc: int, t0: float, inv: _Inverted,
+                  sidecars: dict | None = None) -> pd.DataFrame:
+    """Write one segment — the single write path of every builder.
+
+    postings + doc_lens (+ term_index when the segment has terms, + each
+    `sidecars` {name: pa.Table} as <name>.parquet) go to a uuid tmp dir,
+    which is published atomically; then the checkpoint row is written.
+    Returns that row as a one-row CHECKPOINT_SCHEMA frame. The caller
+    owns the naming and doc range of the segment, and `t0`, the start of
+    its build_sec clock."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    seg_path = os.path.join(index_dir, "segments", name)
+    tmp_path = seg_path + "." + uuid.uuid4().hex + ".tmp"
+    os.makedirs(tmp_path, exist_ok=True)
+    pq.write_table(inv.postings, os.path.join(tmp_path, "postings.parquet"))
+    pq.write_table(
+        pa.Table.from_pandas(inv.doc_lens, preserve_index=False),
+        os.path.join(tmp_path, "doc_lens.parquet"),
+    )
+    if inv.postings.num_rows:
+        _write_term_index(tmp_path, inv.postings.column("term"))
+    for side, tab in (sidecars or {}).items():
+        pq.write_table(tab, os.path.join(tmp_path, side + ".parquet"))
+    _publish_segment(tmp_path, seg_path)
+    ck = {
+        "segment": name,
+        "segment_id": int(segment_id),
+        "min_doc": int(min_doc),
+        "max_doc": int(max_doc),
+        "n_docs": int(len(inv.docs)),
+        "n_tokens": int(inv.n_tokens),
+        "n_postings": int(inv.n_postings),
+        "n_terms": int(inv.postings.num_rows),
+        "build_sec": round(time.perf_counter() - t0, 4),
+    }
+    _write_checkpoint(index_dir, name, ck)
+    return pd.DataFrame([ck])
+
+
+def _doc_range(docs: np.ndarray) -> tuple[int, int]:
+    """(min_doc, max_doc) of a doc-range-keyed segment; (-1, -1) when no
+    doc of its group produced a token."""
+    return (int(docs[0]), int(docs[-1])) if len(docs) else (-1, -1)
 
 
 def read_checkpoints(index_dir: str) -> list[dict]:
@@ -861,6 +977,18 @@ def commit_from_checkpoints(index_dir: str, extra: dict | None = None) -> dict:
 # segment build
 # ---------------------------------------------------------------------------
 
+def _cap_arrow_threads() -> None:
+    """One task = one core (Spark's scheduling assumption): stop pyarrow
+    from silently grabbing the whole box for parquet compression."""
+    import pyarrow as pa
+
+    try:
+        pa.set_cpu_count(1)
+        pa.set_io_thread_count(1)
+    except Exception:
+        pass
+
+
 def build_segments(
     tokens: DataFrame,
     doc_lens: DataFrame | None = None,
@@ -906,68 +1034,23 @@ def build_segments(
     # would only add a second shuffle and Arrow list-column overhead.
     per_doc = tok.select("segment_id", "term", "doc_id", "pos")
 
-    idx_dir = index_dir
-    wp = with_positions
-
     def _build_one(key, pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.perf_counter()
         seg_id = int(key[0])
-        name = _piece_name(seg_id, piece_idx)
-        seg_path = os.path.join(idx_dir, "segments", name)
-        tmp_path = seg_path + "." + uuid.uuid4().hex + ".tmp"
-        os.makedirs(tmp_path, exist_ok=True)
-
-        # numpy invert: sort tokens by (term, doc, pos), find posting runs
-        # (term compares in UTF-16 code-unit order, reference parity)
-        pdf = sort_terms_pdf(pdf, ["term", "doc_id", "pos"])
-        t = pdf["term"].to_numpy()
-        d = pdf["doc_id"].to_numpy(np.int64)
-        p = pdf["pos"].to_numpy(np.int64)
-        n_tok = len(d)
-        post_change = np.ones(n_tok, dtype=bool)
-        if n_tok > 1:
-            post_change[1:] = (t[1:] != t[:-1]) | (d[1:] != d[:-1])
-        post_idx = np.flatnonzero(post_change)
-        docs_p = d[post_idx]
-        tfs = np.diff(np.concatenate([post_idx, [n_tok]]))
-        terms_p = t[post_idx]
-        term_change = np.ones(len(post_idx), dtype=bool)
-        if len(post_idx) > 1:
-            term_change[1:] = terms_p[1:] != terms_p[:-1]
-        # per-doc lengths -> per-posting dl
-        uniq_docs, dl_counts = np.unique(d, return_counts=True)
-        dls_p = dl_counts[np.searchsorted(uniq_docs, docs_p)]
-
-        seg_tab = encode_postings_table(
-            terms_p, term_change, docs_p, tfs, dls_p,
-            positions_flat=p if wp else None,
-        )
-        dl_pdf = pd.DataFrame({"doc_id": uniq_docs, "dl": dl_counts})
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pq.write_table(seg_tab, os.path.join(tmp_path, "postings.parquet"))
-        pq.write_table(
-            pa.Table.from_pandas(dl_pdf, preserve_index=False),
-            os.path.join(tmp_path, "doc_lens.parquet"),
-        )
-        if seg_tab.num_rows:
-            _write_term_index(tmp_path, seg_tab.column("term"))
-        _publish_segment(tmp_path, seg_path)  # atomic, retry-tolerant
-
-        ck = {
-            "segment": name,
-            "segment_id": seg_id,
-            "min_doc": int(uniq_docs[0]),
-            "max_doc": int(uniq_docs[-1]),
-            "n_docs": int(len(uniq_docs)),
-            "n_tokens": int(n_tok),
-            "n_postings": int(len(post_idx)),
-            "n_terms": int(seg_tab.num_rows),
-            "build_sec": round(time.perf_counter() - t0, 4),
-        }
-        _write_checkpoint(idx_dir, name, ck)
-        return pd.DataFrame([ck])
+        # tokens in (doc, pos) order as dictionary codes: the same codes
+        # kernel the fused builders run, so the term rank sort (UTF-16
+        # order, stable) yields (term, doc, pos) posting runs
+        pdf = pdf.sort_values(["doc_id", "pos"], kind="mergesort")
+        ids, counts = np.unique(pdf["doc_id"].to_numpy(np.int64),
+                                return_counts=True)
+        codes, uniq = pd.factorize(pdf["term"].to_numpy())
+        seg_tab, docs, dl, n_tok, n_post = _invert_encode_codes(
+            ids, codes.astype(np.int64), np.asarray(uniq, dtype=object),
+            pdf["pos"].to_numpy(np.int64), counts, with_positions)
+        inv = _Inverted(seg_tab, pd.DataFrame({"doc_id": docs, "dl": dl}),
+                        docs, n_tok, n_post)
+        return _emit_segment(index_dir, _piece_name(seg_id, piece_idx), seg_id,
+                             *_doc_range(docs), t0, inv)
 
     built = per_doc.groupBy("segment_id").applyInPandas(_build_one, CHECKPOINT_SCHEMA)
     built_rows = built.collect()  # action: executes the distributed build
@@ -1048,108 +1131,28 @@ def build_segments_fused(
     )
     src = _apply_resume_filter(src, index_dir, full_ids, partial)
 
-    idx_dir = index_dir
-    wp = with_positions
-    an = analyzer
-    tv = term_vectors
-
     def _build_one(key, pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.perf_counter()
-        # one task = one core (Spark's scheduling assumption): stop pyarrow
-        # from silently grabbing the whole box for parquet compression
-        import pyarrow as _pa
-
-        try:
-            _pa.set_cpu_count(1)
-            _pa.set_io_thread_count(1)
-        except Exception:
-            pass
+        _cap_arrow_threads()
         seg_id = int(key[0])
-        name = _piece_name(seg_id, piece_idx)
-        seg_path = os.path.join(idx_dir, "segments", name)
-        tmp_path = seg_path + "." + uuid.uuid4().hex + ".tmp"
-        os.makedirs(tmp_path, exist_ok=True)
-
         pdf = pdf.sort_values("doc_id", kind="mergesort")
-        doc_ids_in = pdf["doc_id"].to_numpy(np.int64)
-        tv_frames: list[pd.DataFrame] = []
         if flds:
-            # one invert pass per field; concatenating in sorted field-name
-            # order keeps the composite "field\x1fterm" keys globally sorted
-            frames, dl_frames = [], []
-            n_tok = n_post = 0
-            uniq_union: set = set()
-            for fname, _src_col, an_f in flds:
-                texts_f = pdf[fname].to_numpy()
-                codes_f, uniq_f, p_f, counts_f = _analyze_docs_codes(
-                    texts_f, an_f)
-                res = _invert_encode_codes(
-                    doc_ids_in, codes_f, uniq_f, p_f, counts_f, wp,
-                    term_prefix=fname + FIELD_SEP, build_tv=tv,
-                )
-                seg_f, uq, dlc, nt, npst = res[:5]
-                if tv:
-                    tv_frames.append(res[5])
-                frames.append(seg_f)
-                dl_frames.append(
-                    pd.DataFrame({"doc_id": uq, "field": fname, "dl": dlc})
-                )
-                n_tok += nt
-                n_post += npst
-                uniq_union.update(uq.tolist())
-            import pyarrow as _pa2
-
-            seg_tab = _pa2.concat_tables(frames)
-            dl_pdf = pd.concat(dl_frames, ignore_index=True)
-            uniq_docs = np.array(sorted(uniq_union), dtype=np.int64)
+            fields_in = [(fname, pdf[fname].to_numpy(), an_f, None)
+                         for fname, _src_col, an_f in flds]
         else:
-            texts = pdf["text"].to_numpy()
             # analyzer='lang' without a lang column: dispatch falls back
             # to the non-CJK branch per doc rather than KeyError-ing
             langs = (pdf["lang"].to_numpy()
-                     if an == "lang" and "lang" in pdf.columns else None)
-            codes, uniq, p, counts = _analyze_docs_codes(texts, an, langs)
-            res = _invert_encode_codes(
-                doc_ids_in, codes, uniq, p, counts, wp, build_tv=tv
-            )
-            seg_tab, uniq_docs, dl_counts, n_tok, n_post = res[:5]
-            if tv:
-                tv_frames.append(res[5])
-            dl_pdf = pd.DataFrame({"doc_id": uniq_docs, "dl": dl_counts})
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pq.write_table(seg_tab, os.path.join(tmp_path, "postings.parquet"))
-        pq.write_table(
-            pa.Table.from_pandas(dl_pdf, preserve_index=False),
-            os.path.join(tmp_path, "doc_lens.parquet"),
+                     if analyzer == "lang" and "lang" in pdf.columns else None)
+            fields_in = [(None, pdf["text"].to_numpy(), analyzer, langs)]
+        inv = _invert_fields(pdf["doc_id"].to_numpy(np.int64), fields_in,
+                             with_positions, build_tv=term_vectors)
+        return _emit_segment(
+            index_dir, _piece_name(seg_id, piece_idx), seg_id,
+            *_doc_range(inv.docs), t0, inv,
+            sidecars={"term_vectors": inv.term_vectors} if term_vectors
+            else None,
         )
-        if tv and tv_frames:
-            tv_all = sort_terms_pdf(
-                pd.concat(tv_frames, ignore_index=True), ["doc_id", "term"]
-            )
-            pq.write_table(
-                pa.Table.from_pandas(tv_all, preserve_index=False),
-                os.path.join(tmp_path, "term_vectors.parquet"),
-            )
-        if seg_tab.num_rows:
-            _write_term_index(tmp_path, seg_tab.column("term"))
-        _publish_segment(tmp_path, seg_path)
-
-        ck = {
-            "segment": name,
-            "segment_id": seg_id,
-            "min_doc": int(uniq_docs[0]) if len(uniq_docs) else -1,
-            "max_doc": int(uniq_docs[-1]) if len(uniq_docs) else -1,
-            "n_docs": int(len(uniq_docs)),
-            "n_tokens": int(n_tok),
-            "n_postings": int(n_post),
-            "n_terms": int(seg_tab.num_rows),
-            "build_sec": round(time.perf_counter() - t0, 4),
-        }
-        _write_checkpoint(idx_dir, name, ck)
-        return pd.DataFrame([ck])
 
     built = src.groupBy("segment_id").applyInPandas(_build_one, CHECKPOINT_SCHEMA)
     built_rows = built.collect()
@@ -1470,18 +1473,8 @@ def build_segments_aligned(
         for lo, hi in done_ranges:
             src = src.filter(~F.col("doc_id").between(lo, hi))
 
-    idx_dir = index_dir
-    wp = with_positions
-    an = analyzer
-
     def _one(batches):
-        import pyarrow as _pa
-
-        try:
-            _pa.set_cpu_count(1)
-            _pa.set_io_thread_count(1)
-        except Exception:
-            pass
+        _cap_arrow_threads()
         t0 = time.perf_counter()
         parts = [pdf for pdf in batches if len(pdf)]
         if not parts:
@@ -1489,44 +1482,14 @@ def build_segments_aligned(
         pdf = pd.concat(parts, ignore_index=True).sort_values(
             "doc_id", kind="mergesort"
         )
-        doc_ids_in = pdf["doc_id"].to_numpy(np.int64)
-        codes, uniq, p, counts = _analyze_docs_codes(
-            pdf["text"].to_numpy(), an)
-        seg_tab, uniq_docs, dl_counts, n_tok, n_post = _invert_encode_codes(
-            doc_ids_in, codes, uniq, p, counts, wp
-        )
-        lo, hi = int(doc_ids_in[0]), int(doc_ids_in[-1])
-        name = f"seg_a_{lo:012d}_{hi:012d}"
-        seg_path = os.path.join(idx_dir, "segments", name)
-        tmp_path = seg_path + "." + uuid.uuid4().hex + ".tmp"
-        os.makedirs(tmp_path, exist_ok=True)
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pq.write_table(seg_tab, os.path.join(tmp_path, "postings.parquet"))
-        pq.write_table(
-            pa.Table.from_pandas(
-                pd.DataFrame({"doc_id": uniq_docs, "dl": dl_counts}),
-                preserve_index=False,
-            ),
-            os.path.join(tmp_path, "doc_lens.parquet"),
-        )
-        if seg_tab.num_rows:
-            _write_term_index(tmp_path, seg_tab.column("term"))
-        _publish_segment(tmp_path, seg_path)
-        ck = {
-            "segment": name,
-            "segment_id": lo,  # aligned path: range-keyed, not dps-keyed
-            "min_doc": lo,
-            "max_doc": hi,
-            "n_docs": int(len(uniq_docs)),
-            "n_tokens": int(n_tok),
-            "n_postings": int(n_post),
-            "n_terms": int(seg_tab.num_rows),
-            "build_sec": round(time.perf_counter() - t0, 4),
-        }
-        _write_checkpoint(idx_dir, name, ck)
-        yield pd.DataFrame([ck])
+        ids = pdf["doc_id"].to_numpy(np.int64)
+        inv = _invert_fields(
+            ids, [(None, pdf["text"].to_numpy(), analyzer, None)],
+            with_positions)
+        lo, hi = int(ids[0]), int(ids[-1])
+        # aligned path: range-keyed (segment_id = lo), not dps-keyed
+        yield _emit_segment(index_dir, f"seg_a_{lo:012d}_{hi:012d}", lo, lo,
+                            hi, t0, inv)
 
     built_rows = src.mapInPandas(_one, CHECKPOINT_SCHEMA).collect()
 
@@ -1566,8 +1529,8 @@ def build_segments_direct(
     cluster pays too, on every node, forever.
 
     This path distributes FILE PATHS instead: Spark parallelizes one row
-    per parquet file (round-robin repartition -> one file per task, the
-    same placement the aligned scan produces), and each python task opens
+    per parquet file, pre-sliced into ~2 tasks per core (`_file_fanout`,
+    shared with the crawl builder), and each python task opens
     its file directly with pyarrow (`pq.read_table(path, columns=[id,
     text])`), then runs the IDENTICAL tokenize -> invert -> varbyte-encode
     -> atomic-rename kernel. The JVM's share of the build drops to task
@@ -1611,144 +1574,107 @@ def build_segments_direct(
             for c in read_checkpoints(index_dir)
         ]
 
-    idx_dir = index_dir
-    wp = with_positions
-    wv = with_vectors
-    an = analyzer
-    idc = doc_id_col
-    txc = text_col
-    dr = done_ranges
+    def _one_file(path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-    def _one_file(batches):
-        import gc as _gc
+        _cap_arrow_threads()
+        t0 = time.perf_counter()
+        meta = pq.ParquetFile(path).metadata
+        if done_ranges and meta.num_rows:
+            idx_col = meta.schema.to_arrow_schema().get_field_index(doc_id_col)
+            los, his = [], []
+            for rg in range(meta.num_row_groups):
+                st = meta.row_group(rg).column(idx_col).statistics
+                if st is None or st.min is None:
+                    los = []
+                    break
+                los.append(st.min)
+                his.append(st.max)
+            if los and any(
+                lo <= min(los) and max(his) <= hi for lo, hi in done_ranges
+            ):
+                return None  # file fully built by a prior run
+        tab = pq.read_table(path, columns=[doc_id_col, text_col])
+        if tab.num_rows == 0:
+            return None
+        ids = tab.column(doc_id_col).to_numpy().astype(np.int64)
+        # keep text as an Arrow column end-to-end: the codes kernel
+        # tokenizes regex-clean docs without ever materializing python
+        # strings
+        texts = tab.column(text_col).combine_chunks()
+        order = np.argsort(ids, kind="stable")
+        if not np.all(order[:-1] < order[1:]):
+            ids = ids[order]
+            texts = texts.take(pa.array(order))
+        if done_ranges:
+            keep = np.ones(len(ids), bool)
+            for lo, hi in done_ranges:
+                keep &= ~((ids >= lo) & (ids <= hi))
+            if not keep.any():
+                return None
+            if not keep.all():
+                ids = ids[keep]
+                texts = texts.filter(pa.array(keep))
+        inv = _invert_fields(ids, [(None, texts, analyzer, None)],
+                             with_positions)
+        sidecars = None
+        if with_vectors:
+            sidecars = {"term_vectors": _term_vectors_arrow(_term_vectors_frame(
+                ids, np.array(texts.to_pylist(), dtype=object), analyzer))}
+        lo, hi = int(ids[0]), int(ids[-1])
+        return _emit_segment(index_dir, f"seg_a_{lo:012d}_{hi:012d}", lo, lo,
+                             hi, t0, inv, sidecars)
 
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
+    return _file_fanout(spark, files, _one_file, index_dir,
+                        {"aligned": True, "analyzer": analyzer},
+                        plan_only=_plan_only)
 
-        try:
-            _pa.set_cpu_count(1)
-            _pa.set_io_thread_count(1)
-        except Exception:
-            pass
+
+def _file_fanout(spark: SparkSession, files: list[str], build_file,
+                 index_dir: str, extra: dict,
+                 plan_only: bool = False) -> DataFrame:
+    """The file-granular bulk build shared by build_segments_direct and
+    the crawl builder: Spark distributes FILE PATHS, and each python task
+    runs build_file(path) -> checkpoint frame (or None for a skipped file)
+    over its slice, then the driver commits a manifest generation.
+
+    Task packing: one task per FILE maximizes retry granularity but pays
+    an inter-task gap (arrow stream setup/teardown, scheduler latency —
+    measured ~20% of core-time at 32 one-file tasks on 4 cores), so files
+    are packed ~2 tasks per core (wave balance without per-task churn).
+    Checkpoints/segments stay per-file, so RESUME granularity is
+    unchanged — only Spark's retry unit coarsens. The path list is
+    pre-sliced at parallelize time: zero exchanges (a round-robin
+    repartition of a local relation adds a stage + shuffle per build)."""
+
+    def _task(batches):
+        import gc
+
         # the kernel's object graph is acyclic (tuples/lists/ndarrays,
         # refcount-reclaimed); cyclic-GC passes over millions of tracked
         # allocations are pure overhead that compounds across co-located
-        # workers. Collect once at the task boundary instead.
-        _gc.disable()
+        # workers. Collect once at the task boundary instead; workers are
+        # reused, so leave the collector enabled between tasks.
+        gc.disable()
         for pdf in batches:
             for path in pdf["path"]:
-                t0 = time.perf_counter()
-                meta = _pq.ParquetFile(path).metadata
-                if dr and meta.num_rows:
-                    idx_col = meta.schema.to_arrow_schema().get_field_index(idc)
-                    los, his = [], []
-                    for rg in range(meta.num_row_groups):
-                        st = meta.row_group(rg).column(idx_col).statistics
-                        if st is None or st.min is None:
-                            los = []
-                            break
-                        los.append(st.min)
-                        his.append(st.max)
-                    if los and any(
-                        lo <= min(los) and max(his) <= hi for lo, hi in dr
-                    ):
-                        continue  # file fully built by a prior run
-                tab = _pq.read_table(path, columns=[idc, txc])
-                if tab.num_rows == 0:
-                    continue
-                ids = tab.column(idc).to_numpy().astype(np.int64)
-                # keep text as an Arrow column end-to-end: the codes
-                # kernel tokenizes regex-clean docs without ever
-                # materializing python strings
-                texts = tab.column(txc).combine_chunks()
-                order = np.argsort(ids, kind="stable")
-                if not np.all(order[:-1] < order[1:]):
-                    ids = ids[order]
-                    texts = texts.take(_pa.array(order))
-                if dr:
-                    keep = np.ones(len(ids), bool)
-                    for lo, hi in dr:
-                        keep &= ~((ids >= lo) & (ids <= hi))
-                    if not keep.any():
-                        continue
-                    if not keep.all():
-                        ids = ids[keep]
-                        texts = texts.filter(_pa.array(keep))
-                codes, uniq, p, counts = _analyze_docs_codes(texts, an)
-                seg_tab, uniq_docs, dl_counts, n_tok, n_post = (
-                    _invert_encode_codes(ids, codes, uniq, p, counts, wp)
-                )
-                lo, hi = int(ids[0]), int(ids[-1])
-                name = f"seg_a_{lo:012d}_{hi:012d}"
-                seg_path = os.path.join(idx_dir, "segments", name)
-                tmp_path = seg_path + "." + uuid.uuid4().hex + ".tmp"
-                os.makedirs(tmp_path, exist_ok=True)
-                _pq.write_table(
-                    seg_tab, os.path.join(tmp_path, "postings.parquet")
-                )
-                _pq.write_table(
-                    _pa.Table.from_pandas(
-                        pd.DataFrame({"doc_id": uniq_docs, "dl": dl_counts}),
-                        preserve_index=False,
-                    ),
-                    os.path.join(tmp_path, "doc_lens.parquet"),
-                )
-                if seg_tab.num_rows:
-                    _write_term_index(tmp_path, seg_tab.column("term"))
-                if wv:
-                    _pq.write_table(
-                        _term_vectors_arrow(
-                            _term_vectors_frame(
-                                ids,
-                                np.array(texts.to_pylist(), dtype=object),
-                                an,
-                            )
-                        ),
-                        os.path.join(tmp_path, "term_vectors.parquet"),
-                    )
-                _publish_segment(tmp_path, seg_path)
-                ck = {
-                    "segment": name,
-                    "segment_id": lo,
-                    "min_doc": lo,
-                    "max_doc": hi,
-                    "n_docs": int(len(uniq_docs)),
-                    "n_tokens": int(n_tok),
-                    "n_postings": int(n_post),
-                    "n_terms": int(seg_tab.num_rows),
-                    "build_sec": round(time.perf_counter() - t0, 4),
-                }
-                _write_checkpoint(idx_dir, name, ck)
-                yield pd.DataFrame([ck])
-        # one collect at the task boundary; workers are reused, so leave
-        # the collector enabled between tasks
-        _gc.enable()
-        _gc.collect()
+                row = build_file(path)
+                if row is not None:
+                    yield row
+        gc.enable()
+        gc.collect()
 
-    # task packing: one task per FILE maximizes retry granularity but pays
-    # an inter-task gap (arrow stream setup/teardown, scheduler latency —
-    # measured ~20% of core-time at 32 one-file tasks on 4 cores). Packing
-    # multiple files into one task closes the gap; checkpoints/segments
-    # stay per-file, so RESUME granularity is unchanged — only Spark's
-    # retry unit coarsens. Default: ~2 tasks per core (wave balance
-    # without per-task churn); override with SPARK_GRAFT_DIRECT_TASKS.
-    n_tasks = int(os.environ.get("SPARK_GRAFT_DIRECT_TASKS", "0")) or min(
-        len(files), max(1, spark.sparkContext.defaultParallelism * 2)
-    )
-    # pre-sliced parallelize: the same n_tasks packing with ZERO exchanges
-    # (r5 round-robin-repartitioned a local relation — an extra stage +
-    # shuffle of the path list on every build)
+    n_tasks = min(len(files), max(1, spark.sparkContext.defaultParallelism * 2))
     paths_df = spark.createDataFrame(
         spark.sparkContext.parallelize([(f,) for f in files], n_tasks),
         T.StructType([T.StructField("path", T.StringType(), False)]),
     )
-    plan_df = paths_df.mapInPandas(_one_file, CHECKPOINT_SCHEMA)
-    if _plan_only:  # plan-shape pins (tests/test_plans.py) without building
+    plan_df = paths_df.mapInPandas(_task, CHECKPOINT_SCHEMA)
+    if plan_only:  # plan-shape pins (tests/test_plans.py) without building
         return plan_df
     built_rows = plan_df.collect()
-
-    commit_from_checkpoints(index_dir, extra={"aligned": True,
-                                              "analyzer": analyzer})
+    commit_from_checkpoints(index_dir, extra=extra)
     return spark.createDataFrame(built_rows or [], CHECKPOINT_SCHEMA)
 
 

@@ -3,7 +3,7 @@ task per file, ZERO shuffle, no JVM data path.
 
 This composes the WARC streaming parser (`data/warc.py`), HTML text
 extraction + normalization (`pipeline/extract.py`), and the direct bulk
-index kernel (`index/segments.py` `_analyze_docs`/`_invert_encode`) into
+index kernel (`index/segments.py` `_invert_fields`/`_emit_segment`) into
 the single-scan pipeline a production crawl ingest runs:
 
     open .warc.gz -> cut records -> split HTTP -> extract text ->
@@ -11,8 +11,8 @@ the single-scan pipeline a production crawl ingest runs:
     encode -> write segment + checkpoint
 
 all inside ONE python task per WARC file. Spark distributes file paths
-and owns retries/speculation/commit exactly like `build_segments_direct`
-(`segments.py:1110`); the page bytes are decompressed, parsed and
+and owns retries/speculation/commit through the same file fan-out as
+`build_segments_direct` (`segments._file_fanout`); the page bytes are decompressed, parsed and
 tokenized in the process that consumes them and never cross the JVM.
 Segments align with crawl files (the Common-Crawl unit, ~1 GB each), so
 a 64k-file crawl fans out to any cluster width with no exchange.
@@ -38,12 +38,11 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import DataFrame, SparkSession
 
 import re as _re
 
@@ -56,15 +55,10 @@ from ..data.warc import (
 )
 from ..pipeline.extract import extract_text_py, normalize_text_py
 from .segments import (
-    CHECKPOINT_SCHEMA,
-    FIELD_SEP,
-    _analyze_docs_codes,
     _ckpt_dir,
-    _invert_encode_codes,
-    _publish_segment,
-    _write_checkpoint,
-    _write_term_index,
-    commit_from_checkpoints,
+    _emit_segment,
+    _file_fanout,
+    _invert_fields,
     read_checkpoints,
 )
 
@@ -168,164 +162,72 @@ def build_segments_from_warc(
     if title_field and wet:
         raise ValueError("title_field requires HTML pages (wet=False)")
 
-    idx_dir = index_dir
-    an = analyzer
-    wp = with_positions
     want = "conversion" if wet else "response"
-    norm = normalize
-    st = stride
-    tfield = title_field
     parse = parse_warc_stream_tolerant if tolerant else parse_warc_stream
 
-    def _one_file(batches):
-        import gc as _gc
-
-        _gc.disable()
-        for pdf in batches:
-            for path in pdf["path"]:
-                fi = file_idx[path]
-                lo0 = fi * st
-                if lo0 in done_starts:
-                    continue  # file fully indexed by a prior run
-                t0 = time.perf_counter()
-                texts, ids, titles = [], [], []
-                urls, tss = [], []
-                with open(path, "rb") as fh:
-                    for rec in parse(fh):
-                        h = rec["headers"]
-                        if h.get("warc-type") != want:
-                            continue
-                        if wet:
-                            text = rec["payload"].decode("utf-8", "replace")
-                        else:
-                            _status, hh, body = split_http_payload(
-                                rec["payload"]
-                            )
-                            page = decode_html(body, hh.get("content-type"))
-                            if tfield:
-                                titles.append(extract_title_py(page))
-                            text = extract_text_py(page)
-                        if norm:
-                            text = normalize_text_py(text)
-                        ids.append(lo0 + len(ids))
-                        texts.append(text)
-                        urls.append(h.get("warc-target-uri"))
-                        tss.append(parse_warc_date(h.get("warc-date")))
-                if not ids:
+    def _one_file(path):
+        lo0 = file_idx[path] * stride
+        if lo0 in done_starts:
+            return None  # file fully indexed by a prior run
+        t0 = time.perf_counter()
+        texts, ids, titles = [], [], []
+        urls, tss = [], []
+        with open(path, "rb") as fh:
+            for rec in parse(fh):
+                h = rec["headers"]
+                if h.get("warc-type") != want:
                     continue
-                if len(ids) > st:
-                    raise ValueError(
-                        f"{path}: {len(ids)} records exceed stride {st}"
-                    )
-                import pyarrow as _pa
-                import pyarrow.parquet as _pq
-
-                ids_a = np.asarray(ids, dtype=np.int64)
-                texts_a = np.asarray(texts, dtype=object)
-                langs = (
-                    [detect_lang(t) for t in texts] if an == "lang" else None
-                )
-                if tfield:
-                    # composite-key multi-field segment: one invert pass
-                    # per field, concatenated in sorted field-name order
-                    # so the FIELD_SEP-prefixed keys stay globally sorted
-                    # (the fused builder's exact shape, segments.py)
-                    frames, dl_frames = [], []
-                    n_tok = n_post = 0
-                    uniq_set: set = set()
-                    for fname, vals in sorted(
-                        (("text", texts_a),
-                         ("title", np.asarray(titles, dtype=object)))
-                    ):
-                        codes, uniq, p, counts = _analyze_docs_codes(
-                            vals, an, langs if fname == "text" else None
-                        )
-                        seg_f, uq, dlc, nt, npst = _invert_encode_codes(
-                            ids_a, codes, uniq, p, counts, wp,
-                            term_prefix=fname + FIELD_SEP,
-                        )
-                        frames.append(seg_f)
-                        dl_frames.append(
-                            pd.DataFrame(
-                                {"doc_id": uq, "field": fname, "dl": dlc}
-                            )
-                        )
-                        n_tok += nt
-                        n_post += npst
-                        uniq_set.update(uq.tolist())
-                    seg_tab = _pa.concat_tables(frames)
-                    dl_pdf = pd.concat(dl_frames, ignore_index=True)
-                    uniq_docs = np.array(sorted(uniq_set), dtype=np.int64)
+                if wet:
+                    text = rec["payload"].decode("utf-8", "replace")
                 else:
-                    codes, uniq, p, counts = _analyze_docs_codes(
-                        texts_a, an, langs)
-                    (seg_tab, uniq_docs, dl_counts, n_tok,
-                     n_post) = _invert_encode_codes(
-                        ids_a, codes, uniq, p, counts, wp)
-                    dl_pdf = pd.DataFrame(
-                        {"doc_id": uniq_docs, "dl": dl_counts}
-                    )
-                lo, hi = int(ids_a[0]), int(ids_a[-1])
-                name = f"seg_a_{lo:012d}_{hi:012d}"
-                seg_path = os.path.join(idx_dir, "segments", name)
-                tmp_path = seg_path + "." + uuid.uuid4().hex + ".tmp"
-                os.makedirs(tmp_path, exist_ok=True)
-                _pq.write_table(
-                    seg_tab, os.path.join(tmp_path, "postings.parquet")
-                )
-                _pq.write_table(
-                    _pa.Table.from_pandas(dl_pdf, preserve_index=False),
-                    os.path.join(tmp_path, "doc_lens.parquet"),
-                )
-                if seg_tab.num_rows:
-                    _write_term_index(tmp_path, seg_tab.column("term"))
-                # URL sidecar: the crawl metadata a re-crawl supersedence
-                # pass needs (doc_id -> capture url + time); one tiny file
-                # per segment, the stored-fields role for the crawl key
-                _pq.write_table(
-                    _pa.Table.from_pandas(
-                        pd.DataFrame(
-                            {"doc_id": ids_a, "url": urls,
-                             "warc_ts": pd.Series(
-                                 tss, dtype="datetime64[us]")}
-                        ),
-                        preserve_index=False,
-                    ),
-                    os.path.join(tmp_path, "urls.parquet"),
-                )
-                _publish_segment(tmp_path, seg_path)
-                ck = {
-                    "segment": name,
-                    "segment_id": lo,
-                    "min_doc": lo,
-                    "max_doc": hi,
-                    "n_docs": int(len(uniq_docs)),
-                    "n_tokens": int(n_tok),
-                    "n_postings": int(n_post),
-                    "n_terms": int(seg_tab.num_rows),
-                    "build_sec": round(time.perf_counter() - t0, 4),
-                }
-                _write_checkpoint(idx_dir, name, ck)
-                yield pd.DataFrame([ck])
-        _gc.enable()
-        _gc.collect()
+                    _status, hh, body = split_http_payload(rec["payload"])
+                    page = decode_html(body, hh.get("content-type"))
+                    if title_field:
+                        titles.append(extract_title_py(page))
+                    text = extract_text_py(page)
+                if normalize:
+                    text = normalize_text_py(text)
+                ids.append(lo0 + len(ids))
+                texts.append(text)
+                urls.append(h.get("warc-target-uri"))
+                tss.append(parse_warc_date(h.get("warc-date")))
+        if not ids:
+            return None
+        if len(ids) > stride:
+            raise ValueError(
+                f"{path}: {len(ids)} records exceed stride {stride}"
+            )
+        import pyarrow as pa
 
-    n_tasks = min(
-        len(files), max(1, spark.sparkContext.defaultParallelism * 2)
-    )
-    # pre-sliced parallelize: same one-file-per-task fan-out, one stage
-    # (a local relation + repartition pays an extra Exchange per build)
-    paths_df = spark.createDataFrame(
-        spark.sparkContext.parallelize([(f,) for f in files], n_tasks),
-        T.StructType([T.StructField("path", T.StringType(), False)]),
-    )
-    built_rows = paths_df.mapInPandas(_one_file, CHECKPOINT_SCHEMA).collect()
+        ids_a = np.asarray(ids, dtype=np.int64)
+        texts_a = np.asarray(texts, dtype=object)
+        langs = [detect_lang(t) for t in texts] if analyzer == "lang" else None
+        if title_field:
+            # composite-key multi-field segment, the fused builder's shape
+            fields = [("text", texts_a, analyzer, langs),
+                      ("title", np.asarray(titles, dtype=object), analyzer,
+                       None)]
+        else:
+            fields = [(None, texts_a, analyzer, langs)]
+        inv = _invert_fields(ids_a, fields, with_positions)
+        # URL sidecar: the crawl metadata a re-crawl supersedence pass
+        # needs (doc_id -> capture url + time); one tiny file per segment,
+        # the stored-fields role for the crawl key
+        urls_tab = pa.Table.from_pandas(
+            pd.DataFrame(
+                {"doc_id": ids_a, "url": urls,
+                 "warc_ts": pd.Series(tss, dtype="datetime64[us]")}
+            ),
+            preserve_index=False,
+        )
+        lo, hi = int(ids_a[0]), int(ids_a[-1])
+        return _emit_segment(index_dir, f"seg_a_{lo:012d}_{hi:012d}", lo, lo,
+                             hi, t0, inv, {"urls": urls_tab})
 
-    commit_from_checkpoints(
-        index_dir,
-        extra={"aligned": True, "analyzer": analyzer, "source": "warc"},
+    return _file_fanout(
+        spark, files, _one_file, index_dir,
+        {"aligned": True, "analyzer": analyzer, "source": "warc"},
     )
-    return spark.createDataFrame(built_rows or [], CHECKPOINT_SCHEMA)
 
 
 def crawl_urls(spark: SparkSession, index_dir: str) -> DataFrame:

@@ -688,7 +688,7 @@ ZERO-SHUFFLE direct bulk path (one segment per input file, parquet
 opened in the consuming python process, no exchange and no JVM data
 path), so the only cross-task interactions left are host-level
 (scheduler, memory bandwidth). Isolation probes
-(`tools/nojvm_fleet_probe.py`, history in `BENCH/nojvm_probe.json`): a
+(history in `BENCH/nojvm_probe.json`; the probe script was removed): a
 no-JVM fleet — 4 concurrent multiprocessing pools, each 4 pinned cores,
 running the IDENTICAL pyarrow-read + tokenize + invert + encode + write
 kernel over the same shards — measured SAME-WINDOW as Spark pairs gives
