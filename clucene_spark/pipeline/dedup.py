@@ -1,8 +1,9 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Everything is declarative DataFrame algebra over the `documents` table —
-no Python on the hot path — so Catalyst plans partial aggregation,
-broadcast where small, and AQE skew handling. Each operator has a DuckDB
+The operators are declarative DataFrame algebra over the `documents`
+table, so Catalyst plans partial aggregation, broadcast where small, and
+AQE skew handling; the MinHash state is one Arrow kernel pass per
+document batch (no per-shingle rows). Each operator has a DuckDB
 oracle in __spark_entry__ (hashes are md5-derived so both engines compute
 bit-identical values).
 
@@ -114,8 +115,12 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shingle) distinct token n-grams — the dedup unit."""
-    docs = ensure_parallelism(docs)
-    toks = F.split(F.col("text"), " ")
+    # the token array is a projected column: a lambda that captured
+    # split(text) would re-split the whole text once per shingle
+    docs = ensure_parallelism(docs).select(
+        "doc_id", F.split(F.col("text"), " ").alias("toks")
+    )
+    toks = F.col("toks")
     sh = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
         lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
@@ -154,61 +159,135 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
 MERSENNE_31 = (1 << 31) - 1
 
 
-def _minhash_min_aggs(num_hashes: int) -> list:
-    """K min-hash aggregation expressions over an `sh_h` (md5_31) column.
+def _minhash_coeffs(num_hashes: int) -> tuple[np.ndarray, np.ndarray]:
+    """(a, b) int64 vectors of the K universal hashes
+    h_i(s) = (a_i * (md5_60(s) >> 32) + b_i) mod (2^31-1).
 
-    h_i(s) = (a_i * md5_31(s) + b_i) mod (2^31-1), a_i/b_i deterministic
-    per i. The modulus must be SMALL enough that a*h wraps it many times —
-    a non-wrapping modulus leaves every h_i monotone in h, making all K
+    The modulus must be SMALL enough that a*h wraps it many times — a
+    non-wrapping modulus leaves every h_i monotone in h, making all K
     minima pick the same shingle (zero independence, LSH degenerates).
-    a*h < 2^31 * 2^28 = 2^59 stays inside int64.
-    """
-    aggs = []
-    for i in range(num_hashes):
-        a = (((i * 2 + 1) * 2654435761) % MERSENNE_31) + 1
-        b = ((i + 1) * 40503) % MERSENNE_31
-        hv = (F.lit(a) * F.col("sh_h") + F.lit(b)) % F.lit(MERSENNE_31)
-        aggs.append(F.min(hv).alias(f"m{i}"))
-    return aggs
+    a*h < 2^31 * 2^28 = 2^59 stays inside int64."""
+    i = np.arange(num_hashes, dtype=np.int64)
+    a = ((i * 2 + 1) * 2654435761) % MERSENNE_31 + 1
+    b = ((i + 1) * 40503) % MERSENNE_31
+    return a, b
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3, num_hashes: int = 32) -> DataFrame:
-    """(doc_id, hash_id, minhash): K universal-hash minima over shingles.
+_STATE_CHUNK_DOCS = 1024
 
-    K minima as ONE wide aggregation (map-side partial agg, no shuffle
-    bigger than n_docs x K): the K-way row explosion this replaces moved
-    K x n_shingles rows through the plan — 32x the corpus shingle count —
-    for the same K expressions per shingle.
-    """
-    sh = shingles(docs, n).withColumn("sh_h", md5_31(F.col("shingle")))
-    wide = sh.groupBy("doc_id").agg(*_minhash_min_aggs(num_hashes))
-    stack_expr = ", ".join(f"{i}L, m{i}" for i in range(num_hashes))
-    return wide.selectExpr(
-        "doc_id", f"stack({num_hashes}, {stack_expr}) as (hash_id, minhash)"
-    )
+
+def _minhash_state_batches(batches, n: int, a: np.ndarray, b: np.ndarray):
+    """mapInArrow kernel: (doc_id, text) batches -> (doc_id, m0..m{K-1}, S).
+
+    Per chunk, token and shingle boundaries come from the text column's
+    Arrow offsets and its space bytes (UTF-8 never puts 0x20 inside a
+    multi-byte character, so this is split(text, " ") exactly: leading,
+    trailing and repeated spaces give empty tokens). Shingle i of a doc
+    spans tokens i..i+n-1; a doc with at most n tokens is one shingle (its
+    whole text). Each shingle's bytes are md5-hashed once; md5_60 is the
+    digest's top 60 bits. The K minima are numpy reduceats over the
+    chunk's shingle hashes, and S is the per-doc distinct hashes, sorted.
+    Null texts have no shingles and emit no row."""
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    md5 = hashlib.md5
+    # docs are taken _STATE_CHUNK_DOCS at a time: the per-shingle arrays
+    # and digests of one chunk, not of a whole Arrow batch, are alive at once
+    for batch in (
+        whole.slice(lo, _STATE_CHUNK_DOCS)
+        for whole in batches
+        for lo in range(0, whole.num_rows, _STATE_CHUNK_DOCS)
+    ):
+        text = batch.column("text")
+        if text.null_count:
+            batch = batch.filter(pc.is_valid(text))
+            text = batch.column("text")
+        n_docs = len(text)
+        if n_docs == 0:
+            continue
+        _, obuf, buf = text.buffers()
+        offs = np.frombuffer(
+            obuf, np.int64 if pa.types.is_large_string(text.type) else np.int32
+        )[text.offset:text.offset + n_docs + 1].astype(np.int64)
+        raw = memoryview(buf) if buf is not None else b""
+        data = np.frombuffer(raw, np.uint8)
+        sp = np.flatnonzero(data[offs[0]:offs[-1]] == 32) + offs[0]
+        n_tok = np.diff(np.searchsorted(sp, offs)) + 1
+        t0 = np.concatenate(([0], np.cumsum(n_tok)[:-1]))
+        # token byte ranges: tokens start at a doc's offset or after a
+        # space and end at a space or the next doc's offset; both lists
+        # are non-decreasing in (doc, token) order, so a sort merges them
+        tok_start = np.sort(np.concatenate((offs[:-1], sp + 1)))
+        tok_end = np.sort(np.concatenate((sp, offs[1:])))
+        # shingle byte ranges
+        n_sh = np.maximum(n_tok - n + 1, 1)
+        s0 = np.concatenate(([0], np.cumsum(n_sh)[:-1]))
+        sh_doc = np.repeat(np.arange(n_docs), n_sh)
+        i = np.arange(int(n_sh.sum())) - s0[sh_doc]
+        first = t0[sh_doc]
+        sh_start = tok_start[first + i]
+        sh_end = tok_end[first + np.minimum(i + n - 1, n_tok[sh_doc] - 1)]
+        digests = b"".join([
+            md5(raw[s:e]).digest()
+            for s, e in zip(sh_start.tolist(), sh_end.tolist())
+        ])
+        h60 = (np.frombuffer(digests, ">u8")[::2] >> 4).astype(np.int64)
+        h28 = h60 >> 32
+        cols = [batch.column("doc_id")]
+        for ai, bi in zip(a.tolist(), b.tolist()):
+            hv = (ai * h28 + bi) % MERSENNE_31
+            cols.append(pa.array(np.minimum.reduceat(hv, s0)))
+        # S: per-doc sorted distinct hashes (collect_set's set, in order)
+        order = np.lexsort((h60, sh_doc))
+        hs, ds = h60[order], sh_doc[order]
+        new = np.ones(len(hs), bool)
+        new[1:] = (hs[1:] != hs[:-1]) | (ds[1:] != ds[:-1])
+        s_offs = np.zeros(n_docs + 1, np.int32)
+        np.cumsum(np.bincount(ds[new], minlength=n_docs), out=s_offs[1:])
+        cols.append(
+            pa.ListArray.from_arrays(pa.array(s_offs), pa.array(hs[new]))
+        )
+        yield pa.RecordBatch.from_arrays(
+            cols, ["doc_id"] + [f"m{k}" for k in range(len(a))] + ["S"]
+        )
 
 
 def minhash_doc_state(docs: DataFrame, n: int = 3, num_hashes: int = 32) -> DataFrame:
-    """ONE-scan per-doc LSH state: (doc_id, m0..m{K-1}, S).
+    """Per-doc LSH state: (doc_id, m0..m{K-1}, S), one row per non-null doc.
 
     The K signature minima AND the 60-bit shingle set used by the exact
-    verify step come out of a single shingle scan + single groupBy — the
-    round-2 shape tokenized and exploded the corpus twice (once for
-    signatures, once for verify sets), which at 100 TB doubles the dominant
-    cost of the whole dedup pipeline. Sets are 60-bit shingle hashes, not
-    strings: ~5x smaller rows (the sets side broadcasts when small),
-    long-array intersection instead of string compares, and cross-doc
-    collision odds ~n_shingles^2/2^60 per pair — no effect at 4dp.
-    """
-    # one md5 per shingle: md5_31 (first 7 hex digits) is the top 28 bits
-    # of md5_60 (first 15 hex digits), so derive it with a shift instead
-    # of a second md5+conv pass over every shingle
-    sh = shingles(docs, n).select(
-        "doc_id", md5_60(F.col("shingle")).alias("sh64")
-    ).withColumn("sh_h", F.shiftright(F.col("sh64"), 32))
-    aggs = _minhash_min_aggs(num_hashes)
-    aggs.append(F.collect_set("sh64").alias("S"))
-    return sh.groupBy("doc_id").agg(*aggs)
+    verify step come out of ONE Arrow pass per document
+    (`_minhash_state_batches`): the text is split, its distinct word
+    n-grams hashed with md5_60, the K universal-hash minima taken in numpy
+    and S emitted as a sorted distinct int64 list — no per-shingle rows,
+    no groupBy exchange, no interpreted aggregate. Sets are 60-bit shingle
+    hashes, not strings: ~5x smaller rows (the sets side broadcasts when
+    small), long-array intersection instead of string compares, and
+    cross-doc collision odds ~n_shingles^2/2^60 per pair — no effect at
+    4dp. The values equal the md5_60 / min / collect_set expressions over
+    shingles() (pytest-pinned).
+
+    The kernel maps over the input partitions; an input with fewer
+    partitions than defaultParallelism (a small parquet scan) is first
+    hash-partitioned on doc_id so every core runs a share."""
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    src = docs.select("doc_id", "text")
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() < par:
+        src = src.repartition(par, F.col("doc_id"))
+    a, b = _minhash_coeffs(num_hashes)
+    schema = StructType(
+        [docs.schema["doc_id"]]
+        + [StructField(f"m{i}", LongType()) for i in range(num_hashes)]
+        + [StructField("S", ArrayType(LongType()))]
+    )
+    return src.mapInArrow(
+        lambda it: _minhash_state_batches(it, n, a, b), schema
+    )
 
 
 @contextmanager
@@ -305,7 +384,7 @@ def minhash_lsh_pairs(
         bands = pick_bands(num_hashes, threshold)
     rows_per_band = num_hashes // bands
     if state is None:
-        # ONE shingle scan feeds both the banded candidate generation and
+        # ONE state pass feeds both the banded candidate generation and
         # the exact-verify sets (round 2 ran shingles() twice — the double
         # tokenize+explode pass dominated the whole pipeline's cost). The
         # state frame is persisted: at 100 TB this is the materialized
@@ -335,16 +414,14 @@ def minhash_lsh_pairs(
             state = state.filter(F.size("S") >= min_shingles)
         # persist AND materialize now: the banding self-join's two branches
         # otherwise race into an unpopulated cache and each computes the full
-        # shingle aggregation — double work, and the duplicated sort-based
-        # collect_set fallback spills tens of GB at 1M docs. One count()
-        # builds the cache once; this IS the "signatures table written once"
-        # that a production pipeline materializes between stages.
+        # state pass — double work. One count() builds the cache once; this
+        # IS the "signatures table written once" that a production pipeline
+        # materializes between stages.
         state = state.persist()
     # Materialize (populates a fresh persist in one pass) AND size the
     # verify build side: the banding's two branches must not race into an
-    # unpopulated cache (double work + duplicated sort-based collect_set
-    # fallback spilling tens of GB at 1M docs), and the set-attachment
-    # join strategy below needs the sets table's real size.
+    # unpopulated cache (each would compute the state pass), and the
+    # set-attachment join strategy below needs the sets table's real size.
     srow = state.agg(
         F.count("*").alias("n"), F.sum(F.size("S")).alias("tot")
     ).first()
@@ -803,9 +880,11 @@ def chunk_dedup(docs: DataFrame, chunk_tokens: int = 10) -> DataFrame:
     hash + two ints — no chunk text moves) and one groupBy shuffle on the
     hash; at 100 TB this is the same single-shuffle profile as
     exact_dedup, ~10x the row count."""
-    toks = F.split(F.col("text"), " ")
+    toks = F.col("toks")
     n_chunks = F.ceil(F.size(toks) / chunk_tokens).cast("int")
     chunks = ensure_parallelism(docs).select(
+        "doc_id", F.split(F.col("text"), " ").alias("toks")
+    ).select(
         "doc_id",
         F.posexplode(
             F.transform(
@@ -858,8 +937,10 @@ def window_dedup_stats(
     left rows on one key with a single build row — AQE skew-join splits
     it. Window hashing is JVM-side column math (md5 over array_join of a
     slice), no Python in the plan."""
-    toks = F.split(F.col("text"), " ")
-    wins = ensure_parallelism(docs).filter(F.size(toks) >= w).select(
+    toks = F.col("toks")
+    wins = ensure_parallelism(docs).select(
+        "doc_id", F.split(F.col("text"), " ").alias("toks")
+    ).filter(F.size(toks) >= w).select(
         "doc_id",
         F.explode(
             F.transform(
@@ -1034,14 +1115,17 @@ def span_dedup(docs: DataFrame, w: int = 16) -> DataFrame:
 
     toks = F.split(F.col("text"), " ")
     base = ensure_parallelism(docs).select("doc_id", "text")
-    wins = base.filter(F.size(toks) >= w).select(
+    wtoks = F.col("toks")
+    wins = base.select("doc_id", toks.alias("toks")).filter(
+        F.size(wtoks) >= w
+    ).select(
         "doc_id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.size(toks) - w),
+                F.sequence(F.lit(0), F.size(wtoks) - w),
                 lambda i: F.struct(
                     (i + 1).cast("int").alias("pos"),
-                    md5_60(F.array_join(F.slice(toks, i + 1, w), " ")).alias(
+                    md5_60(F.array_join(F.slice(wtoks, i + 1, w), " ")).alias(
                         "h"
                     ),
                 ),

@@ -122,12 +122,17 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
         F.size(F.array_distinct(toks)).alias("n_distinct"),
     )
 
+    # the lambdas read a projected token column, so the text is split
+    # once per doc rather than once per n-gram
+    tok_docs = docs.select("doc_id", toks.alias("toks"))
+
     def _grams(n: int):
+        t = F.col("toks")
         g = F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+            F.sequence(F.lit(0), F.size(t) - n),
+            lambda i: F.array_join(F.slice(t, i + 1, n), " "),
         )
-        return docs.filter(F.size(toks) >= n).select(
+        return tok_docs.filter(F.size(t) >= n).select(
             "doc_id", F.lit(n).alias("n"), F.explode(g).alias("gram")
         )
 

@@ -1,8 +1,11 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout that holds this file, so pytest in any copy of the repo
+# imports that copy's package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from clucene_spark.session import get_spark
 

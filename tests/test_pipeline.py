@@ -1906,3 +1906,99 @@ def test_minhash_grid_verify_matches_broadcast_plan(spark):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert got == ref
+
+
+def _expression_minhash_state(docs, n=3, num_hashes=32):
+    """Reference MinHash state as Spark expressions: shingles() rows,
+    md5_60 per shingle, then K `min` aggregates of the universal hashes
+    (a_i * (h >> 32) + b_i) mod (2^31-1) plus collect_set of the hashes."""
+    from clucene_spark.pipeline.dedup import md5_60, shingles
+
+    m31 = (1 << 31) - 1
+    sh = shingles(docs, n).select(
+        "doc_id", md5_60(F.col("shingle")).alias("sh64")
+    ).withColumn("sh_h", F.shiftright(F.col("sh64"), 32))
+    aggs = []
+    for i in range(num_hashes):
+        a = (((i * 2 + 1) * 2654435761) % m31) + 1
+        b = ((i + 1) * 40503) % m31
+        hv = (F.lit(a) * F.col("sh_h") + F.lit(b)) % F.lit(m31)
+        aggs.append(F.min(hv).alias(f"m{i}"))
+    aggs.append(F.collect_set("sh64").alias("S"))
+    return sh.groupBy("doc_id").agg(*aggs)
+
+
+def test_minhash_state_kernel_matches_expression_state(docs, spark):
+    """The Arrow state kernel gives the same 32 minima and the same set S
+    per doc as the expression reference, with every S strictly ascending,
+    and the same verified pairs at min_shingles=1."""
+    from clucene_spark.pipeline.dedup import (
+        minhash_doc_state,
+        minhash_lsh_pairs,
+        with_planted_dups,
+    )
+
+    edge = spark.createDataFrame(
+        [
+            (900_000_001, ""),
+            (900_000_002, "two words"),
+            (900_000_003, "x x x x x x x x"),
+            (900_000_004, "  lead  and  double  spaces "),
+            (900_000_005, "naïve café 東京 déjà vu über straße"),
+            (900_000_006, "naïve café 東京 déjà vu über straße fin"),
+            (900_000_007, None),
+            (900_000_008, "one"),
+            (900_000_009, " "),
+        ],
+        "doc_id long, text string",
+    )
+    corpus = with_planted_dups(docs, every=10, keep_frac=0.8).unionByName(edge)
+    null_ids = {900_000_007}
+    ks = [f"m{i}" for i in range(32)]
+
+    want = {r["doc_id"]: r for r in _expression_minhash_state(corpus).collect()}
+    got = {r["doc_id"]: r for r in minhash_doc_state(corpus).collect()}
+    assert set(got) - null_ids == set(want) - null_ids
+    assert len(want) > 100
+    for d, w in want.items():
+        if d in null_ids:
+            continue
+        g = got[d]
+        assert [g[k] for k in ks] == [w[k] for k in ks], d
+        assert list(g["S"]) == sorted(w["S"]), d
+        assert all(x < y for x, y in zip(g["S"], g["S"][1:])), d
+    assert len(got[900_000_003]["S"]) == 1  # one distinct shingle
+
+    ref_pairs = sorted(
+        tuple(r) for r in minhash_lsh_pairs(
+            corpus, 3, threshold=0.5, min_shingles=1,
+            state=_expression_minhash_state(corpus),
+        ).collect()
+    )
+    pairs = sorted(
+        tuple(r) for r in
+        minhash_lsh_pairs(corpus, 3, threshold=0.5, min_shingles=1).collect()
+    )
+    assert ref_pairs and pairs == ref_pairs
+    assert (900_000_005, 900_000_006, 0.8333) in pairs
+
+
+def test_minhash_state_plan_maps_input_partitions(spark):
+    """The state is one MapInArrow over the input partitions: no Exchange
+    when the input already has defaultParallelism partitions, one doc_id
+    hash exchange when it has fewer."""
+    from clucene_spark.pipeline.dedup import minhash_doc_state
+
+    par = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 64, 1, par).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.lit("w"), F.col("id").cast("string"),
+                    F.lit("z y x")).alias("text"),
+    )
+    plan = minhash_doc_state(wide)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
+    assert "Exchange" not in plan and "Aggregate" not in plan
+    narrow = minhash_doc_state(wide.coalesce(1))
+    plan = narrow._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning(doc_id") == 1
+    assert narrow.count() == 64

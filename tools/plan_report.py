@@ -162,23 +162,34 @@ def main() -> None:
         _tree(p, 12),
     ))
 
-    # 4. MinHash LSH: banded candidates, reused exchange, no cartesian
-    from clucene_spark.pipeline.dedup import minhash_lsh_pairs, with_planted_dups
+    # 4. MinHash LSH: Arrow state kernel, bucket lists, no cartesian
+    from clucene_spark.pipeline.dedup import (
+        minhash_doc_state, minhash_lsh_pairs, with_planted_dups,
+    )
 
     corpus = with_planted_dups(docs.select("doc_id", "text"))
+    ps = _plan(minhash_doc_state(corpus))
+    assert "MapInArrow" in ps and "collect_set" not in ps
+    assert "Aggregate" not in ps
     p = _plan(minhash_lsh_pairs(corpus))
     assert "CartesianProduct" not in p and "NestedLoop" not in p
+    assert "collect_set" not in p
     sections.append((
         "MinHash + LSH near-dup pairs",
-        "ONE shingle scan feeds both the 32 signature minima and the "
-        "verify sets (single wide aggregation); candidates come from a "
-        "band-key equi-self-join whose two sides are the identical "
-        "subplan (Spark computes the exchange once and reuses it); "
-        "buckets above the skew cap are dropped by a window count before "
-        "the join; exact-Jaccard verification joins candidate PAIRS to "
-        "per-doc hash-set arrays — there is no shingle-keyed pair join "
-        "and no cross product at any stage.",
-        _tree(p, 36),
+        "The per-doc state is ONE Arrow pass (`MapInArrow`) per document: "
+        "split on spaces, distinct word n-grams, md5_60 per shingle, the "
+        "32 universal-hash minima in numpy, and the shingle-hash set S "
+        "stored sorted — no per-shingle rows, no groupBy exchange, no "
+        "collect_set aggregate (the input is hash-partitioned on doc_id "
+        "only when it has fewer partitions than cores). Candidates come "
+        "from one groupBy on the band key: a partial-aggregated count "
+        "finds the buckets above the skew cap, an anti-join drops them, "
+        "and each surviving bucket's (doc_id, |S|) pairs are one sorted "
+        "`collect_list` whose pairs are generated inside the array. "
+        "Exact-Jaccard verification joins candidate PAIRS to the per-doc "
+        "hash-set arrays — there is no shingle-keyed pair join and no "
+        "cross product at any stage. Shown: the state, then the pairs.",
+        _tree(ps, 8) + "\n\n" + _tree(p, 36),
     ))
 
     # 4b. window dedup: corpus-sized flag join stays shuffled-hash
